@@ -625,7 +625,13 @@ def _q_archive_datasets(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_sroie,
     )
 
-    tmp = _tempfile.mkdtemp(prefix="doctr_spark_archives_")
+    # stable dir, rebuilt in place each run (the returned frames read the
+    # image files lazily at collect time, so it cannot be deleted here; a
+    # per-run mkdtemp would leak one orphan dir per driver round). Keyed
+    # by uid like _q_hub_zoo's model cache
+    tmp = os.path.join(_tempfile.gettempdir(), f"doctr_spark_archives_{os.getuid()}")
+    if os.path.exists(tmp):
+        _shutil.rmtree(tmp)
     base = os.path.join(tmp, "src")
     funsd_ann = {
         "form": [
@@ -1580,52 +1586,57 @@ def _q_streaming_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doctr_spark.streaming.stream import extract_stream, stream_transcripts
 
     base = tempfile.mkdtemp(prefix="doctr_spark_stream_q_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
-    gen = make_transcripts(spark, 4, partitions=2, ocr_ratio=1.0, html_ratio=0.0).cache()
-    expected = {
-        (r["conv_id"], r["turn_idx"]): r["expected_text"]
-        for r in gen.select("conv_id", "turn_idx", "expected_text").collect()
-    }
-    groups = (("conv-000000", "conv-000001"), ("conv-000002", "conv-000003"))
-    for i, convs in enumerate(groups):
-        tmp = os.path.join(base, f"stage_{i}")
-        (
-            gen.filter(F.col("conv_id").isin(list(convs)))
-            .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-        )
-        shutil.copy(
-            glob.glob(os.path.join(tmp, "part-*.parquet"))[0],
-            os.path.join(in_dir, f"{i}.parquet"),
-        )
-        _time.sleep(1.1)  # file-source ordering is by mtime
-    gen.unpersist()
-
-    batches: list[dict] = []
-
-    def capture(df, epoch_id):
-        rows = df.select("conv_id", "turn_idx", "extracted_text").collect()
-        if rows:
-            batches.append(
-                {
-                    "convs": {r["conv_id"] for r in rows},
-                    "n_turns": len(rows),
-                    "n_exact": sum(
-                        expected[(r["conv_id"], r["turn_idx"])] == r["extracted_text"]
-                        for r in rows
-                    ),
-                }
+    try:
+        in_dir = os.path.join(base, "in")
+        os.makedirs(in_dir)
+        gen = make_transcripts(spark, 4, partitions=2, ocr_ratio=1.0, html_ratio=0.0).cache()
+        expected = {
+            (r["conv_id"], r["turn_idx"]): r["expected_text"]
+            for r in gen.select("conv_id", "turn_idx", "expected_text").collect()
+        }
+        groups = (("conv-000000", "conv-000001"), ("conv-000002", "conv-000003"))
+        for i, convs in enumerate(groups):
+            tmp = os.path.join(base, f"stage_{i}")
+            (
+                gen.filter(F.col("conv_id").isin(list(convs)))
+                .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+                .coalesce(1).write.mode("overwrite").parquet(tmp)
             )
+            shutil.copy(
+                glob.glob(os.path.join(tmp, "part-*.parquet"))[0],
+                os.path.join(in_dir, f"{i}.parquet"),
+            )
+            _time.sleep(1.1)  # file-source ordering is by mtime
+        gen.unpersist()
 
-    q = (
-        extract_stream(stream_transcripts(spark, in_dir, max_files_per_trigger=1))
-        .writeStream.outputMode("append")
-        .foreachBatch(capture)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+        batches: list[dict] = []
+
+        def capture(df, epoch_id):
+            rows = df.select("conv_id", "turn_idx", "extracted_text").collect()
+            if rows:
+                batches.append(
+                    {
+                        "convs": {r["conv_id"] for r in rows},
+                        "n_turns": len(rows),
+                        "n_exact": sum(
+                            expected[(r["conv_id"], r["turn_idx"])] == r["extracted_text"]
+                            for r in rows
+                        ),
+                    }
+                )
+
+        q = (
+            extract_stream(stream_transcripts(spark, in_dir, max_files_per_trigger=1))
+            .writeStream.outputMode("append")
+            .foreachBatch(capture)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+        q.stop()
+    finally:
+        # every row is collected above; nothing reads these files later
+        shutil.rmtree(base)
     out_rows = []
     for b in batches:
         # name batches by CONTENT (which conv group), not arrival epoch

@@ -2,21 +2,26 @@
 sidecar table (semantics the reference lacks entirely — SURVEY.md §4.3).
 
 Design: conversations hash into ``buckets`` deterministic buckets
-(pmod(xxhash64(conv_id))). Each bucket is extracted and written as its own
-partition directory; a manifest (sidecar) table records one row per
-completed bucket with extraction metrics (turns, boxes, chars, strip
-ratio). A restart anti-joins the manifest: only unfinished buckets run.
+(pmod(xxhash64(conv_id))). Each bucket is written as its own partition
+directory; a manifest (sidecar) table records one row per completed
+bucket with the bucket count it was hashed under and extraction metrics
+(turns, convs, boxes, chars, quarantined errors, strip ratio). A restart
+skips manifested buckets; a restart under a different bucket count is
+refused, since the same conversation would hash to a different bucket
+and be written twice (or never).
 
 At 100 TB the same layout holds: buckets are the unit of retry/lineage
 (O(100-1000) of them), each bucket write is a normal distributed job, and
 the input scan for bucket b is pruned by predicate pushdown when the
 source table is bucketed/partitioned by the same key — on plain parquet
-it degrades to a full-scan filter per bucket, which is why bucket counts
+it degrades to a full-scan filter per job, which is why bucket counts
 should stay coarse."""
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,8 +29,14 @@ from pyspark.sql import functions as F
 from .pipeline import extract_turns
 
 MANIFEST_SCHEMA = (
-    "bucket int, n_turns long, n_convs long, n_boxes long, n_chars long, "
-    "avg_strip_ratio double, status string, completed_ts timestamp"
+    "bucket int, buckets int, n_turns long, n_convs long, n_boxes long, n_chars long, "
+    "n_errors long, avg_strip_ratio double, status string, completed_ts timestamp"
+)
+# the result columns the manifest metrics read back; an explicit schema
+# makes a write that produced no rows read as empty instead of failing
+# schema inference
+_READ_BACK_SCHEMA = (
+    "conv_id string, payload_kind string, n_boxes int, n_chars int, strip_ratio double, bucket int"
 )
 
 
@@ -33,14 +44,67 @@ def with_bucket(df: DataFrame, buckets: int) -> DataFrame:
     return df.withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(buckets)).cast("int"))
 
 
-def completed_buckets(spark: SparkSession, manifest_dir: str) -> set[int]:
+def _done_rows(spark: SparkSession, manifest_dir: str) -> list:
+    """(bucket, buckets) of every completed bucket. Only a missing manifest
+    directory means a fresh start; an unreadable manifest raises."""
     if not os.path.exists(manifest_dir):
-        return set()
-    try:
-        rows = spark.read.parquet(manifest_dir).filter(F.col("status") == "done").select("bucket").collect()
-    except Exception:
-        return set()
-    return {r["bucket"] for r in rows}
+        return []
+    manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
+    return manifest.filter(F.col("status") == "done").select("bucket", "buckets").collect()
+
+
+def completed_buckets(spark: SparkSession, manifest_dir: str) -> set[int]:
+    return {r["bucket"] for r in _done_rows(spark, manifest_dir)}
+
+
+def _extract_buckets(
+    spark: SparkSession, bucketed: DataFrame, todo: list[int], buckets: int, results_dir: str, manifest_dir: str
+) -> None:
+    """Extract ``todo`` buckets in one job, then append their manifest rows."""
+    res = with_bucket(extract_turns(bucketed.filter(F.col("bucket").isin(todo)).drop("bucket")), buckets)
+    (
+        # co-locate each bucket before the partitioned write via an AQE
+        # REBALANCE on the bucket key: one shuffle of slim post-extraction
+        # text rows buys ~one file per bucket instead of tasks x buckets
+        # small files (the dynamic-overwrite commit moves files SERIALLY on
+        # the driver, so file count is a fixed serial cost that was
+        # strangling wide clusters: 32-core 7.1k -> 19.1k cold / 24.7k warm
+        # turns/s on a 605k-turn corpus). Unlike a plain
+        # repartition(buckets, bucket), REBALANCE also SPLITS an oversized
+        # bucket at the advisory partition size — a single 10^5-turn
+        # conversation concentrates one bucket, and a hard
+        # one-task-per-bucket rule would serialize its whole write behind
+        # one core (the skew-bench straggler); splitting costs a handful of
+        # extra files, still O(1) per bucket for the serial commit.
+        res.hint("rebalance", "bucket")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(results_dir)
+    )
+    written = spark.read.schema(_READ_BACK_SCHEMA).parquet(results_dir).filter(F.col("bucket").isin(todo))
+    per_bucket = written.groupBy("bucket").agg(
+        F.count("*").alias("n_turns"),
+        F.countDistinct("conv_id").alias("n_convs"),
+        F.sum("n_boxes").alias("n_boxes"),
+        F.sum("n_chars").alias("n_chars"),
+        F.count(F.when(F.col("payload_kind") == "error", 1)).alias("n_errors"),
+        F.avg("strip_ratio").alias("avg_strip_ratio"),
+    )
+    # every todo bucket gets a manifest row — an empty bucket (no rows, so
+    # no partition dir) is still "done" with zero metrics, otherwise it
+    # would rerun on every resume
+    (
+        spark.createDataFrame([(b,) for b in todo], "bucket int")
+        .join(per_bucket, "bucket", "left")
+        .na.fill({"n_turns": 0, "n_convs": 0, "n_boxes": 0, "n_chars": 0, "n_errors": 0, "avg_strip_ratio": 1.0})
+        .select(
+            "bucket", F.lit(buckets).alias("buckets"), "n_turns", "n_convs", "n_boxes", "n_chars", "n_errors",
+            "avg_strip_ratio", F.lit("done").alias("status"), F.current_timestamp().alias("completed_ts"),
+        )
+        .write.mode("append")
+        .parquet(manifest_dir)
+    )
 
 
 def run_extraction_checkpointed(
@@ -55,131 +119,40 @@ def run_extraction_checkpointed(
 
     ``max_buckets_this_run`` lets tests simulate an interrupted run.
     ``grouped=True`` runs ALL remaining buckets in one job (single input
-    scan + ``partitionBy(bucket)`` dynamic-overwrite write) instead of one
-    scan per bucket — the 100 TB shape: N remaining buckets cost one pass,
-    and a mid-job failure just leaves un-manifested partition dirs that the
-    next run dynamically overwrites. Per-bucket mode keeps the finest
+    scan + ``partitionBy(bucket)`` dynamic-overwrite write) — the 100 TB
+    shape: N remaining buckets cost one pass, and a mid-job failure just
+    leaves un-manifested partition dirs that the next run clears.
+    ``grouped=False`` runs the same job once per bucket, for the finest
     retry/lineage granularity (each bucket commits independently).
-    Returns a summary dict.
+    Raises ``ValueError`` before any extraction when the manifest was
+    written under a different bucket count. Returns a summary dict.
     """
     results_dir = os.path.join(out_dir, "results")
     manifest_dir = os.path.join(out_dir, "manifest")
-    done = completed_buckets(spark, manifest_dir)
+    rows = _done_rows(spark, manifest_dir)
+    found = {r["buckets"] for r in rows}
+    if found - {buckets}:
+        got = ", ".join("missing (an older manifest)" if n is None else str(n) for n in sorted(found, key=str))
+        raise ValueError(
+            f"manifest {manifest_dir} has buckets={got}, this run asks for buckets={buckets}: "
+            "conversations would hash to other buckets and be written twice or never"
+        )
+    done = {r["bucket"] for r in rows}
+    todo = [b for b in range(buckets) if b not in done][:max_buckets_this_run]
+    # a crashed run, or one under another bucket count whose manifest was
+    # then deleted, may have left partition dirs without a manifest row;
+    # dynamic overwrite only rewrites partitions present in the NEW data,
+    # so such rows would stay in results/ (and in the read-back metrics)
+    # next to their re-extracted copies. Manifested buckets are never
+    # touched.
+    for stale in glob.glob(os.path.join(results_dir, "bucket=*")):
+        if int(stale.rsplit("=", 1)[1]) not in done:
+            shutil.rmtree(stale)
     bucketed = with_bucket(transcripts, buckets)
-
-    if grouped:
-        todo = [b for b in range(buckets) if b not in done]
-        if max_buckets_this_run is not None:
-            todo = todo[:max_buckets_this_run]
-        if todo:
-            # a prior failed grouped run may have left partition dirs for
-            # un-manifested buckets; dynamic overwrite only rewrites
-            # partitions present in the NEW data, so a retry that
-            # legitimately produces zero rows for such a bucket would leave
-            # the stale rows in results/ (and in the read-back metrics).
-            # Clear todo-bucket dirs up front — manifested buckets are
-            # never touched.
-            import shutil
-
-            for b in todo:
-                stale = os.path.join(results_dir, f"bucket={b}")
-                if os.path.exists(stale):
-                    shutil.rmtree(stale, ignore_errors=True)
-            part = bucketed.filter(F.col("bucket").isin(todo)).drop("bucket")
-            res = with_bucket(extract_turns(part), buckets)
-            (
-                # co-locate each bucket before the partitioned write via an
-                # AQE REBALANCE on the bucket key: one shuffle of slim
-                # post-extraction text rows buys ~one file per bucket
-                # instead of tasks x buckets small files (the dynamic-
-                # overwrite commit moves files SERIALLY on the driver, so
-                # file count is a fixed serial cost that was strangling
-                # wide clusters: 32-core 7.1k -> 19.1k cold / 24.7k warm
-                # turns/s on a 605k-turn corpus). Unlike a plain
-                # repartition(buckets, bucket), REBALANCE also SPLITS an
-                # oversized bucket at the advisory partition size — a
-                # single 10^5-turn conversation concentrates one bucket,
-                # and a hard one-task-per-bucket rule would serialize its
-                # whole write behind one core (the skew-bench straggler);
-                # splitting costs a handful of extra files, still O(1) per
-                # bucket for the serial commit.
-                res.hint("rebalance", "bucket")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(results_dir)
-            )
-            try:
-                written = spark.read.parquet(results_dir).filter(F.col("bucket").isin(todo))
-                per_bucket = written.groupBy("bucket").agg(
-                    F.count("*").alias("n_turns"),
-                    F.countDistinct("conv_id").alias("n_convs"),
-                    F.coalesce(F.sum("n_boxes"), F.lit(0)).alias("n_boxes"),
-                    F.coalesce(F.sum("n_chars"), F.lit(0)).alias("n_chars"),
-                    F.coalesce(F.avg("strip_ratio"), F.lit(1.0)).alias("avg_strip_ratio"),
-                )
-            except Exception:  # fully-empty write: no parquet files to read
-                per_bucket = spark.createDataFrame(
-                    [], "bucket int, n_turns long, n_convs long, n_boxes long, n_chars long, avg_strip_ratio double"
-                )
-            # every todo bucket gets a manifest row — an empty bucket (no
-            # rows, so no partition dir) is still "done" with zero metrics,
-            # otherwise it would rerun on every resume
-            todo_df = spark.createDataFrame([(b,) for b in todo], "bucket int")
-            metrics = (
-                todo_df.join(per_bucket, "bucket", "left")
-                .na.fill({"n_turns": 0, "n_convs": 0, "n_boxes": 0, "n_chars": 0, "avg_strip_ratio": 1.0})
-                .withColumn("status", F.lit("done"))
-                .withColumn("completed_ts", F.current_timestamp())
-                .select(
-                    F.col("bucket").cast("int"),
-                    "n_turns", "n_convs", "n_boxes", "n_chars",
-                    "avg_strip_ratio", "status", "completed_ts",
-                )
-            )
-            metrics.write.mode("append").parquet(manifest_dir)
-        return {
-            "processed": todo,
-            "skipped": sorted(done),
-            "remaining": buckets - len(done) - len(todo),
-        }
-
-    processed = []
-    for b in range(buckets):
-        if b in done:
-            continue
-        if max_buckets_this_run is not None and len(processed) >= max_buckets_this_run:
-            break
-        part = bucketed.filter(F.col("bucket") == b).drop("bucket")
-        res = extract_turns(part)
-        res.write.mode("overwrite").parquet(os.path.join(results_dir, f"bucket={b}"))
-        written = spark.read.parquet(os.path.join(results_dir, f"bucket={b}"))
-        metrics = written.agg(
-            F.count("*").alias("n_turns"),
-            F.countDistinct("conv_id").alias("n_convs"),
-            F.sum("n_boxes").alias("n_boxes"),
-            F.sum("n_chars").alias("n_chars"),
-            F.avg("strip_ratio").alias("avg_strip_ratio"),
-        ).collect()[0]
-        manifest_row = spark.createDataFrame(
-            [
-                (
-                    b,
-                    metrics["n_turns"],
-                    metrics["n_convs"],
-                    metrics["n_boxes"] or 0,
-                    metrics["n_chars"] or 0,
-                    float(metrics["avg_strip_ratio"] or 1.0),
-                    "done",
-                )
-            ],
-            "bucket int, n_turns long, n_convs long, n_boxes long, n_chars long, avg_strip_ratio double, status string",
-        ).withColumn("completed_ts", F.current_timestamp())
-        manifest_row.write.mode("append").parquet(manifest_dir)
-        processed.append(b)
-
-    remaining = buckets - len(done) - len(processed)
-    return {"processed": processed, "skipped": sorted(done), "remaining": remaining}
+    # per-bucket mode is grouped mode with one bucket to do
+    for job in [todo] if grouped and todo else [[b] for b in todo]:
+        _extract_buckets(spark, bucketed, job, buckets, results_dir, manifest_dir)
+    return {"processed": todo, "skipped": sorted(done), "remaining": buckets - len(done) - len(todo)}
 
 
 def read_extraction_results(spark: SparkSession, out_dir: str) -> DataFrame:

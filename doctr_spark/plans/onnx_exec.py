@@ -257,6 +257,13 @@ class NumpySession:
             # optional inputs arrive as empty names (the Resize roi slot)
             ins = [values[i] if i else None for i in node["inputs"]]
             op = node["op_type"]
+            if len(node["outputs"]) > 1:
+                # every op below computes only its first output; a second
+                # one (MaxPool Indices, BatchNormalization running stats)
+                # would otherwise be missing and fail later, or be wrong
+                raise NotImplementedError(
+                    f"NumpySession computes one output per node; {op} node has outputs {node['outputs']}"
+                )
             if op == "Conv":
                 out = _conv2d(
                     ins[0], ins[1], ins[2] if len(ins) > 2 else None,

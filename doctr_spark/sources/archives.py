@@ -80,6 +80,7 @@ import io
 import json
 import os
 import zipfile
+from collections import Counter
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -305,6 +306,18 @@ def parse_cocotext(
 # ------------------------------------------------------------------ loaders
 
 
+def _by_basename(parsed: dict) -> dict:
+    """Re-key an annotation map from relative image paths to basenames,
+    the only part of the path ``binaryFile`` keeps as ``img_name``. Two
+    paths with one basename would silently share one annotation, so they
+    raise instead."""
+    counts = Counter(os.path.basename(k) for k in parsed)
+    clashes = sorted(name for name, n in counts.items() if n > 1)
+    if clashes:
+        raise ValueError(f"annotated image paths share the basenames {clashes}; images are keyed by basename")
+    return {os.path.basename(k): v for k, v in parsed.items()}
+
+
 def _load_archive_dataset(
     spark: SparkSession,
     img_folder: str,
@@ -398,7 +411,8 @@ def load_ic03(
     (SceneTrialTrain/SceneTrialTest, ic03.py:77-81); image paths in the
     XML are relative to that folder. Note: binaryFile surfaces basenames,
     so the broadcast map is re-keyed by basename — IC03's archives keep
-    basenames unique across subdirs (apanar_*/IMG_NNNN numbering)."""
+    basenames unique across subdirs (apanar_*/IMG_NNNN numbering), and a
+    clash raises."""
     sub = os.path.join(root, "SceneTrialTrain" if train else "SceneTrialTest")
     xml_path = os.path.join(sub, "words.xml")
     if not os.path.exists(xml_path):
@@ -406,9 +420,7 @@ def load_ic03(
     with open(xml_path) as fh:
         parsed = parse_ic03_words_xml(fh.read(), use_polygons)
     imgs = _images_df(spark, sub, list(parsed))
-    # XML image names may carry subdirs — binaryFile keeps only the
-    # basename; re-key the broadcast map the same way
-    parsed = {os.path.basename(k): v for k, v in parsed.items()}
+    parsed = _by_basename(parsed)
     return _attach_broadcast_columns(spark, imgs, parsed, ["geoms", "labels"], GEOM_SCHEMA)
 
 
@@ -417,7 +429,8 @@ def load_svt(
 ) -> DataFrame:
     """SVT extracted-archive root: svt1/{train,test}.xml with image paths
     relative to svt1/ (svt.py:68-75). Broadcast map re-keyed by basename
-    (the published archive's img/NN.jpg basenames are unique)."""
+    (the published archive's img/NN.jpg basenames are unique; a clash
+    raises)."""
     sub = os.path.join(root, "svt1")
     xml_path = os.path.join(sub, "train.xml" if train else "test.xml")
     if not os.path.exists(xml_path):
@@ -425,7 +438,7 @@ def load_svt(
     with open(xml_path) as fh:
         parsed = parse_svt_xml(fh.read(), use_polygons)
     imgs = _images_df(spark, sub, list(parsed))
-    parsed = {os.path.basename(k): v for k, v in parsed.items()}
+    parsed = _by_basename(parsed)
     return _attach_broadcast_columns(spark, imgs, parsed, ["geoms", "labels"], GEOM_SCHEMA)
 
 
@@ -474,7 +487,7 @@ def load_iiit5k(
                 geoms.append([x, y, x + w, y + h])
         parsed[img_path] = (geoms, list(label))
     imgs = _images_df(spark, sub, list(parsed))
-    parsed = {os.path.basename(k): v for k, v in parsed.items()}
+    parsed = _by_basename(parsed)
     return _attach_broadcast_columns(spark, imgs, parsed, ["geoms", "labels"], GEOM_SCHEMA)
 
 
@@ -513,7 +526,7 @@ def load_synthtext(
             ]
         parsed[img_path] = (geoms, labels)
     imgs = _images_df(spark, sub, list(parsed))
-    parsed = {os.path.basename(k): v for k, v in parsed.items()}
+    parsed = _by_basename(parsed)
     return _attach_broadcast_columns(spark, imgs, parsed, ["geoms", "labels"], GEOM_SCHEMA)
 
 
@@ -543,9 +556,7 @@ def load_mjsynth(
         rel = path[2:].strip() if path.startswith("./") else path.strip()
         parsed[rel] = path.split("_")[1]
     imgs = _images_df(spark, img_folder, list(parsed))
-    # binaryFile surfaces basenames; MJSynth filenames carry a unique
-    # numeric suffix, so the basename re-key is collision-free
-    parsed = {os.path.basename(k): v for k, v in parsed.items()}
+    parsed = _by_basename(parsed)
     return _attach_broadcast_columns(spark, imgs, parsed, ["label"], "label string")
 
 
@@ -574,7 +585,7 @@ def load_iiithws(
         rel, label = ln.split()[0:2]
         parsed[rel] = label
     imgs = _images_df(spark, img_folder, list(parsed))
-    parsed = {os.path.basename(k): v for k, v in parsed.items()}
+    parsed = _by_basename(parsed)
     return _attach_broadcast_columns(spark, imgs, parsed, ["label"], "label string")
 
 
@@ -590,8 +601,7 @@ def load_wildreceipt(
     with open(label_path) as fh:
         for line in fh.read().strip().split("\n"):
             rec = json.loads(line)
-            parsed[os.path.basename(rec["file_name"])] = parse_wildreceipt_line(
-                rec, use_polygons
-            )
+            parsed[rec["file_name"]] = parse_wildreceipt_line(rec, use_polygons)
+    parsed = _by_basename(parsed)
     imgs = _images_df(spark, img_folder, list(parsed))
     return _attach_broadcast_columns(spark, imgs, parsed, ["geoms", "labels"], GEOM_SCHEMA)

@@ -14,7 +14,8 @@ Local sandbox usage (no spark-submit needed):
     python scripts/run_extraction.py --demo
 
 The job is resumable: completed buckets are recorded in the sidecar
-manifest and skipped on restart (plans/checkpoint.py).
+manifest and skipped on restart (plans/checkpoint.py). A restart with
+another --buckets raises instead of resuming.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ def main() -> None:
     ap.add_argument("--input", help="transcript parquet dir (conv_id, turn_idx, role, text, tool, ts)")
     ap.add_argument("--output", help="output dir (results/ + manifest/)")
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--per-bucket-scan", action="store_true", help="one input scan per bucket (finest retry granularity); default is grouped: one scan for all remaining buckets")
+    ap.add_argument("--per-bucket-scan", action="store_true", help="one job per bucket through the same sink path (finest retry granularity); default is grouped: one job for all remaining buckets")
     ap.add_argument("--salt-partitions", type=int, default=0, help="pre-UDF salted respread partitions (0 = auto: 4x parallelism when the input is coarser than 3x parallelism; -1 = off, rely on input splits)")
     ap.add_argument("--demo", action="store_true", help="generate a small corpus and run end-to-end locally")
     args = ap.parse_args()

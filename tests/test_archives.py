@@ -377,6 +377,19 @@ def test_svt_and_cocotext_loaders_end_to_end(spark, tmp_path):
     assert rows["ct2.jpg"]["geoms"][0] == [30.0, 40.0, 50.0, 50.0]
 
 
+def test_basename_rekey_rejects_same_name_in_two_subdirs(spark, tmp_path):
+    """binaryFile keys images by basename, so two annotated images with one
+    file name in different subdirs must raise, not share one annotation."""
+    sub = tmp_path / "svt" / "svt1"
+    for d in ("a", "b"):
+        (sub / d).mkdir(parents=True)
+        (sub / d / "x.jpg").write_bytes(b"svt-" + d.encode())
+    xml = SVT_XML.replace("img/14_03.jpg", "a/x.jpg").replace("img/14_04.jpg", "b/x.jpg")
+    (sub / "train.xml").write_text(xml)
+    with pytest.raises(ValueError, match=r"\['x.jpg'\]"):
+        load_svt(spark, str(tmp_path / "svt"), train=True)
+
+
 # ------------------------------------------------- MJSynth / IIIT-HWS
 
 MJSYNTH_ANN = (

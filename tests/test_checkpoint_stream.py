@@ -1,5 +1,8 @@
 """Resumable checkpointed extraction + streaming extraction."""
 
+import os
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -55,6 +58,143 @@ def test_checkpoint_resume(spark, corpus, tmp_path_factory):
     manifest = spark.read.parquet(f"{out}/manifest")
     assert manifest.count() == 4
     assert manifest.agg(F.sum("n_turns")).collect()[0][0] == total
+
+
+def _file_state(root) -> dict:
+    """Every file under ``root`` with its size and mtime."""
+    state = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            state[os.path.join(d, f)] = (st.st_size, st.st_mtime_ns)
+    return state
+
+
+def _manifest_metrics(spark, out) -> list[tuple]:
+    """Manifest rows without the completion time, sorted by bucket."""
+    rows = spark.read.parquet(f"{out}/manifest").drop("completed_ts").collect()
+    return sorted(tuple(round(v, 9) if isinstance(v, float) else v for v in r) for r in rows)
+
+
+@pytest.mark.parametrize("grouped", [True, False])
+def test_checkpoint_refuses_changed_bucket_count(spark, corpus, tmp_path_factory, grouped):
+    """A resume under another bucket count would hash conversations into
+    other buckets (turns written twice or never): it raises, naming the
+    field and both counts, before any job writes a file."""
+    inp = corpus.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    for first, second in ((4, 8), (8, 4)):
+        out = str(tmp_path_factory.mktemp("ckpt_rebucket"))
+        run_extraction_checkpointed(spark, inp, out, buckets=first, max_buckets_this_run=2, grouped=grouped)
+        before = _file_state(out)
+        with pytest.raises(ValueError, match=f"buckets={first}.*buckets={second}"):
+            run_extraction_checkpointed(spark, inp, out, buckets=second, grouped=grouped)
+        assert _file_state(out) == before
+
+
+def test_checkpoint_refuses_manifest_without_bucket_count(spark, corpus, tmp_path_factory):
+    """A manifest written before the ``buckets`` column existed cannot say
+    what its buckets meant: resuming from it raises."""
+    from datetime import datetime
+
+    out = str(tmp_path_factory.mktemp("ckpt_old_manifest"))
+    spark.createDataFrame(
+        [(0, 10, 2, 0, 50, 1.0, "done", datetime(2024, 1, 1))],
+        "bucket int, n_turns long, n_convs long, n_boxes long, n_chars long, "
+        "avg_strip_ratio double, status string, completed_ts timestamp",
+    ).write.parquet(f"{out}/manifest")
+    with pytest.raises(ValueError, match="buckets=missing"):
+        run_extraction_checkpointed(spark, corpus, out, buckets=4)
+    assert not os.path.exists(f"{out}/results")
+
+
+def test_checkpoint_unreadable_manifest_raises(spark, corpus, tmp_path_factory):
+    """Only a missing manifest directory means a fresh start: a manifest
+    file that cannot be read fails the run instead of re-extracting every
+    bucket."""
+    out = str(tmp_path_factory.mktemp("ckpt_bad_manifest"))
+    os.makedirs(f"{out}/manifest")
+    with open(f"{out}/manifest/part-00000.parquet", "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        completed_buckets(spark, f"{out}/manifest")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_extraction_checkpointed(spark, corpus, out, buckets=4)
+    assert not os.path.exists(f"{out}/results")
+
+
+def test_checkpoint_manifest_counts_quarantined_turns(spark, corpus, tmp_path_factory):
+    """A corrupt page bundle is quarantined as a payload_kind='error' row,
+    and its bucket's manifest row counts it in ``n_errors`` — in both
+    modes, which write identical manifests."""
+    import base64
+    import json
+
+    from doctr_spark.plans.checkpoint import with_bucket
+
+    bad_tool = json.dumps(
+        {"kind": "page_bundle", "b64": base64.b64encode(b"DSPGgarbage-not-a-bundle").decode()}
+    )
+    bad = spark.createDataFrame(
+        [("conv-bad", 0, "user", "[attachment]", bad_tool, None)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    inp = corpus.select("conv_id", "turn_idx", "role", "text", "tool", "ts").unionByName(bad)
+    bad_bucket = with_bucket(bad, 4).collect()[0]["bucket"]
+    metrics = []
+    for grouped in (True, False):
+        out = str(tmp_path_factory.mktemp("ckpt_errors"))
+        run_extraction_checkpointed(spark, inp, out, buckets=4, grouped=grouped)
+        manifest = spark.read.parquet(f"{out}/manifest")
+        assert {r["bucket"]: r["n_errors"] for r in manifest.collect()} == {
+            b: int(b == bad_bucket) for b in range(4)
+        }
+        assert {r["buckets"] for r in manifest.collect()} == {4}
+        metrics.append(_manifest_metrics(spark, out))
+    assert metrics[0] == metrics[1]
+
+
+def _resume_cases(n: int = 6, seed: int = 3) -> list[tuple[int, int, int]]:
+    """Seeded (first bucket count, interrupt point, resume bucket count)
+    cases; the resume keeps the bucket count about half the time. Seed 3
+    draws a partial and a complete first run resumed under another count,
+    an empty first run (no manifest) resumed under another count, and
+    three partial runs resumed under the same count."""
+    rng = random.Random(seed)
+    cases = []
+    for _ in range(n):
+        first = rng.choice((2, 3, 4))
+        cases.append((first, rng.randint(0, first), rng.choice((first, first, 2, 3, 4))))
+    return cases
+
+
+@pytest.mark.parametrize("first,cap,second", _resume_cases())
+def test_checkpoint_resume_is_exactly_once_or_refused(spark, corpus, tmp_path_factory, first, cap, second):
+    """Property: an interrupted run resumed with the same or another bucket
+    count ends in exactly one correct row per input turn, or in a refusal
+    naming ``buckets`` that leaves every file as it was. A refusal happens
+    exactly when a manifest of another count exists. Both modes end alike."""
+    inp = corpus.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    expected = {(r["conv_id"], r["turn_idx"]): r["expected_text"] for r in corpus.collect()}
+    outcomes = []
+    for grouped in (True, False):
+        out = str(tmp_path_factory.mktemp("ckpt_prop"))
+        run_extraction_checkpointed(spark, inp, out, buckets=first, max_buckets_this_run=cap, grouped=grouped)
+        before = _file_state(out)
+        if cap > 0 and second != first:
+            with pytest.raises(ValueError, match="buckets"):
+                run_extraction_checkpointed(spark, inp, out, buckets=second, grouped=grouped)
+            assert _file_state(out) == before
+            outcomes.append("refused")
+            continue
+        s = run_extraction_checkpointed(spark, inp, out, buckets=second, grouped=grouped)
+        assert s["remaining"] == 0
+        rows = read_extraction_results(spark, out).select("conv_id", "turn_idx", "extracted_text").collect()
+        got = {(r["conv_id"], r["turn_idx"]): r["extracted_text"] for r in rows}
+        assert len(rows) == len(got) and got == expected
+        manifest = _manifest_metrics(spark, out)
+        assert spark.read.parquet(f"{out}/manifest").agg(F.sum("n_turns")).collect()[0][0] == len(expected)
+        outcomes.append((sorted(rows), manifest))
+    assert outcomes[0] == outcomes[1]
 
 
 def test_streaming_extraction(spark, corpus, tmp_path_factory):
@@ -271,7 +411,8 @@ def test_checkpoint_grouped_clears_stale_failed_partitions(spark, corpus, tmp_pa
     no manifest row. If the retry legitimately produces zero rows for that
     bucket, dynamic overwrite alone would leave the stale rows in results/
     and count them into the manifest — the retry must clear un-manifested
-    todo partitions first."""
+    partitions first, including a bucket number this run's count never
+    reaches (left by a run under more buckets whose manifest is gone)."""
     import os
 
     out = str(tmp_path_factory.mktemp("ckpt_stale"))
@@ -284,14 +425,13 @@ def test_checkpoint_grouped_clears_stale_failed_partitions(spark, corpus, tmp_pa
 
     victim = 0
     pruned = with_bucket(inp, 4).filter(F.col("bucket") != victim).drop("bucket")
-    stale_dir = os.path.join(out, "results", f"bucket={victim}")
-    os.makedirs(stale_dir, exist_ok=True)
-    spark.createDataFrame(
-        [("ghost-conv", 0, "plain", "STALE", "STALE", 0, 0, 0, 1.0, [])],
-        "conv_id string, turn_idx int, payload_kind string, extracted_text string, "
-        "expected_text string, n_pages int, n_boxes long, n_chars long, strip_ratio double, "
-        "words array<struct<value:string>>",
-    ).write.mode("overwrite").parquet(stale_dir)
+    for b in (victim, 7):
+        spark.createDataFrame(
+            [("ghost-conv", 0, "plain", "STALE", "STALE", 0, 0, 0, 1.0, [])],
+            "conv_id string, turn_idx int, payload_kind string, extracted_text string, "
+            "expected_text string, n_pages int, n_boxes long, n_chars long, strip_ratio double, "
+            "words array<struct<value:string>>",
+        ).write.mode("overwrite").parquet(os.path.join(out, "results", f"bucket={b}"))
 
     s = run_extraction_checkpointed(spark, pruned, out, buckets=4, grouped=True)
     assert victim in s["processed"]

@@ -75,6 +75,15 @@ def test_numpy_executor_rejects_unsupported_ops(tmp_path):
         NumpySession(str(p))
 
 
+def test_numpy_executor_rejects_multi_output_nodes():
+    """Every op computes only its first output, so a node that declares a
+    second one (MaxPool's Indices) must fail by name, not run half-done."""
+    node = encode_node("MaxPool", ["x"], ["y", "indices"], kernel_shape=[2, 2], strides=[2, 2])
+    x = np.arange(16, dtype=np.float32).reshape(1, 1, 4, 4)
+    with pytest.raises(NotImplementedError, match=r"MaxPool.*'y', 'indices'"):
+        _exec_single([node], {}, x, x.shape)
+
+
 def test_onnx_detector_boxes_match_ink_family():
     det = onnx_detector(ONNX_DET_PATH, postproc=INK_MODEL_POSTPROC)[1]()
     for words in (["HELLO", "WORLD"], ["A+B=C", "R&D", "#1"], ["READY.", "GO!", "OK,"]):
